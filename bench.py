@@ -314,15 +314,18 @@ def main() -> None:
         df = qs[name](spark, sf_dir)
         if not eager:
             t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        # free this query's eager localCheckpoint blocks (r16, VERDICT
-        # r15 #3: bounded checkpoint storage). AFTER the clock stops
-        # and AFTER the noop write fully materialized the result, so
-        # nothing pending can read a freed block; cleanup cost is
-        # driver-side and untimed, exactly like the warm passes.
-        release_eager_pins()
-        return dt
+        try:
+            df.write.format("noop").mode("overwrite").save()
+            return time.time() - t0
+        finally:
+            # free this query's eager localCheckpoint blocks (r16, VERDICT
+            # r15 #3: bounded checkpoint storage) — also when the write
+            # raises, so a failed query's pins are released under its own
+            # name, not the next query's. AFTER the clock stops and AFTER
+            # the noop write fully materialized the result, so nothing
+            # pending can read a freed block; cleanup cost is driver-side
+            # and untimed, exactly like the warm passes.
+            release_eager_pins()
 
     # warm-up: JIT + parquet footer caches on a small query, plus the
     # Python/Arrow worker pool (st5's applyInPandasWithState otherwise

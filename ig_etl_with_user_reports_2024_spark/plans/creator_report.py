@@ -18,8 +18,12 @@ Spark shape (SURVEY.md §3.1 "rebuild lifecycle"):
                      │  aggregate (A4-A14)
                      ├─ users ⋈ post-aggregates (J3) + broadcast dims
                      │  (pricing C3, niche keywords C9, platforms)
-                     ├─ classifier CASE columns (C1-C14)
-                     └─ sinks: analyzed JSON (S4), wide CSV (S5), txt (S6)
+                     ├─ classifier CASE columns (C1-C14) + ER-desc sort
+                     ├─ persist the finished report (lazy: the first sink
+                     │  runs the joins once and fills the cache)
+                     └─ sinks, each reading the cached sorted report:
+                        analyzed JSON (S4), txt (S6), wide CSV (S5 —
+                        plans/wide_csv.py)
 
 Every date window takes a pinned ``as_of`` (Q8); every order-sensitive
 step carries the arrival-order ``pos`` column (Q10); Python round() maps
@@ -804,7 +808,7 @@ def creator_collaborations(
             "recent_collaborations"
         ),
     )
-    return F.broadcast(keys).join(collected, "username", "left").select(
+    return keys.join(collected, "username", "left").select(
         "username",
         "paid_pos",
         "tag_pos",
@@ -1409,8 +1413,10 @@ def creator_profile_features(
 # --------------------------------------------------------------------------
 
 
-# caches pinned by the most recent creator_report() call; released at
-# the start of the next call (see comment inside creator_report).
+# caches pinned by the most recent creator_report() call — users, feat,
+# hours, keys and the returned report itself, which the sinks read;
+# released at the start of the next call (see comment inside
+# creator_report).
 # CONTRACT: creator_report is single-threaded per SparkSession — a
 # concurrent second call unpersists the first call's caches, which can
 # only cost recomputation (if the first report is not yet materialized),
@@ -1430,7 +1436,10 @@ def creator_report(
     tz_offset_min: int = 0,
 ) -> DataFrame:
     """The full per-creator report DataFrame (reference output record,
-    SURVEY.md §1.4), sorted by average_engagement_rate desc (K5)."""
+    SURVEY.md §1.4), sorted by average_engagement_rate desc (K5).
+
+    Returned persisted, lazily: the first sink's job fills the cache and
+    the others read it. The next call releases it."""
     # The persisted handles below are internal, so callers can't
     # unpersist them. Bound the leak to ONE call's caches: each new
     # creator_report call releases the previous call's handles (by then
@@ -1680,7 +1689,7 @@ def creator_report(
         + " to "
         + local_as_of.strftime("%Y-%m-%d")
     )
-    return (
+    report = (
         report.withColumn("fake_follower_score", fake_score)
         .withColumn("suspicious_indicators", suspicious)
         .withColumn("authenticity_score", 100 - fake_score)
@@ -1758,10 +1767,18 @@ def creator_report(
             F.col("average_engagement_rate").desc_nulls_last(), F.col("username").asc()
         )
     )
+    # The three sinks (analyzed JSON, txt, wide CSV) each consume the
+    # finished report; unpersisted, every sink re-runs the whole join
+    # plan (3 executions per pass). Lazy: the first sink fills the cache
+    # as a side effect of its own job — an eager count() would add one.
+    report = report.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED_HANDLES.append(report)
+    return report
 
 
 # --------------------------------------------------------------------------
-# Sinks (S4/S5/S6 — build plan §7.2 step 9).
+# Sinks (S4/S6 — build plan §7.2 step 9; the S5 wide CSV is
+# plans/wide_csv.py's flatten_report + sanitize_and_write).
 # --------------------------------------------------------------------------
 
 
@@ -1770,22 +1787,6 @@ def write_analyzed_json(report: DataFrame, path: str) -> None:
     the reference's single-envelope analyzed.json,
     analyze_insta_enhanced.py:2005-2017)."""
     report.write.mode("overwrite").json(path)
-
-
-def write_wide_csv(report: DataFrame, path: str) -> None:
-    """S5 — wide CSV: struct/map/array cells JSON-stringified (X8), comma
-    sanitize on free-text (X9), header row (jsontocsv_enhanced.py:313-318).
-    """
-    cols = []
-    for f in report.schema.fields:
-        c = F.col(f.name)
-        if f.dataType.typeName() in ("struct", "map", "array"):
-            cols.append(F.to_json(c).alias(f.name))
-        elif f.dataType.typeName() == "string":
-            cols.append(F.translate(c, ",\n", "  ").alias(f.name))
-        else:
-            cols.append(c)
-    report.select(*cols).write.mode("overwrite").option("header", True).csv(path)
 
 
 def render_txt_report(row) -> str:

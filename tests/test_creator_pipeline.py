@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ig_etl_with_user_reports_2024_spark.plans import creator_report as cr
+from ig_etl_with_user_reports_2024_spark.plans import wide_csv as wc
 
 AS_OF = dt.datetime(2025, 9, 7)
 EPOCH = int(AS_OF.timestamp())
@@ -145,9 +146,7 @@ def fixture_dirs(tmp_path_factory):
 def report(spark, fixture_dirs):
     users = cr.load_users(spark, f"{fixture_dirs}/*/userInfo.json")
     posts = cr.load_posts(spark, f"{fixture_dirs}/*/postInfo.json")
-    df = cr.creator_report(spark, users, posts, as_of=AS_OF)
-    df.cache()
-    return df
+    return cr.creator_report(spark, users, posts, as_of=AS_OF)
 
 
 def test_private_profile_filtered(report):
@@ -234,7 +233,7 @@ def test_sinks(report, tmp_path, spark):
     out_csv = str(tmp_path / "wide_csv")
     out_txt = str(tmp_path / "txt")
     cr.write_analyzed_json(report, out_json)
-    cr.write_wide_csv(report, out_csv)
+    wc.sanitize_and_write(wc.flatten_report(report), out_csv)
     cr.write_txt_reports(report, out_txt)
     back = spark.read.json(out_json)
     assert back.count() == 2
@@ -249,9 +248,36 @@ def test_sinks(report, tmp_path, spark):
     assert "Report Generated: 2025-09-07" in body
 
 
-def test_wide_csv_flatten(report, tmp_path, spark):
-    from ig_etl_with_user_reports_2024_spark.plans import wide_csv as wc
+def _plan_nodes(plan):
+    """Node names of a physical plan, descending through adaptive plans
+    and their query stages but not into a cached relation's stored plan
+    (InMemoryTableScan is a leaf: the plan it reads sits behind the
+    cache, not under it)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return [name] + _plan_nodes(plan.plan())
+    names = [name]
+    children = plan.children()
+    for i in range(children.size()):
+        names += _plan_nodes(children.apply(i))
+    return names
 
+
+def test_sinks_read_the_cached_report(report, tmp_path):
+    # one report execution per pass: the first sink runs the join plan
+    # and fills the report's cache; a later sink's plan is a scan of that
+    # cache plus its own projection — no join or exchange of the report
+    cr.write_analyzed_json(report, str(tmp_path / "analyzed_json"))
+    flat = wc.flatten_report(report)
+    assert len(flat.collect()) == 2
+    nodes = _plan_nodes(flat._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in nodes, nodes
+    assert not [n for n in nodes if "Join" in n or "Exchange" in n], nodes
+
+
+def test_wide_csv_flatten(report, tmp_path, spark):
     flat = wc.flatten_report(report)
     assert [f.name for f in flat.schema.fields] == wc.HEADERS
     rows = {r.username: r for r in flat.collect()}
@@ -302,16 +328,25 @@ def test_successive_report_calls_release_caches_and_stay_correct(
     spark, fixture_dirs
 ):
     # each creator_report call releases the PREVIOUS call's persisted
-    # users/feat handles (bounded cache lifecycle) — both calls must
-    # produce identical, correct results even though the second call
-    # unpersists the first's internal caches
+    # handles — users/feat/hours/keys and the final report itself
+    # (bounded cache lifecycle) — both calls must produce identical,
+    # correct results even though the second call unpersists the first's
+    # caches
+    def persistent_rdds():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
     users = cr.load_users(spark, f"{fixture_dirs}/*/userInfo.json")
     posts = cr.load_posts(spark, f"{fixture_dirs}/*/postInfo.json")
     first = cr.creator_report(spark, users, posts, as_of=AS_OF)
     rows1 = {r.username: r.follower_count for r in first.collect()}
+    after_one = persistent_rdds()
     second = cr.creator_report(spark, users, posts, as_of=AS_OF)
     rows2 = {r.username: r.follower_count for r in second.collect()}
     assert rows1 == rows2 and len(rows1) > 0
+    # the second call's caches replace the first's; none of them linger,
+    # and the first report's own pin is the one that was released
+    assert persistent_rdds() == after_one
+    assert not first.is_cached and second.is_cached
     # the first DF still computes correctly after its caches released
     assert {r.username: r.follower_count for r in first.collect()} == rows1
 

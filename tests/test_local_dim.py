@@ -113,3 +113,22 @@ def test_local_dim_empty_falls_back(spark):
 def test_local_dim_rejects_non_literals(spark):
     with pytest.raises(TypeError):
         local_dim(spark, [(object(),)], "o string")
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        "k string, amount decimal(38,0)",
+        "k string, tags map<string,int>",
+        "k string, s struct<a:int>",
+    ],
+)
+def test_local_dim_rejects_parameterized_and_nested_types(spark, schema):
+    with pytest.raises(ValueError, match="simple types"):
+        local_dim(spark, [("a", None)], schema)
+
+
+@pytest.mark.parametrize("v", [float("inf"), float("-inf"), float("nan")])
+def test_local_dim_rejects_non_finite_floats(spark, v):
+    with pytest.raises(ValueError, match="finite"):
+        local_dim(spark, [("a", v)], "k string, d double")

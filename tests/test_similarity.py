@@ -472,12 +472,10 @@ def test_ann6_trained_cells_beat_seeded_and_match_probe(spark, sf_oracle):
 
 
 def test_dot_norm_unrolled_equals_fold_all_widths(spark):
-    # Bit-identity pin for the _UNROLL_DIM=64 codegen fast path (r16,
-    # ADVICE r15 #3 / VERDICT r15 #3): the guarded _dot/_norm must equal
-    # the fold-only form EXACTLY (same IEEE addition order) on 64-dim
-    # rows, take the fold branch on every other width without tripping
-    # ANSI out-of-bounds on the unrolled a[i] terms, and propagate NULL
-    # arrays / null elements identically.
+    # Fold-semantics regression pin for _dot/_norm: on widths 63, 64 and
+    # 65 they must equal a left-to-right aggregate fold EXACTLY (same
+    # IEEE addition order, no tolerance), and propagate a NULL array or
+    # a null element to a NULL result.
     rows = []
     for w, tag in [(63, "short"), (64, "exact"), (65, "long")]:
         rows.append((tag, [float(i % 7) - 3.0 for i in range(1, w + 1)],
