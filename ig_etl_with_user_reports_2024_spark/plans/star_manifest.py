@@ -92,7 +92,7 @@ from .registry import QUERIES, query
 _CM1_SQL = f"""
     WITH dd10 AS ({{dd10}}),
     t8 AS ({{txt8}}),
-    base AS (
+    base AS MATERIALIZED (
         SELECT doc_id, cluster_id, kept,
                {sql_hash_split('cluster_id')} AS split
         FROM dd10
@@ -296,7 +296,7 @@ _CP1_SQL = f"""
         WHERE cm.action = 'keep'
     ),
     mix AS ({{mix}}),
-    adm AS (SELECT doc, source, n_tokens FROM mix WHERE kept),
+    adm AS MATERIALIZED (SELECT doc, source, n_tokens FROM mix WHERE kept),
     shuf AS ({{shuf}}),
     cj AS (
         SELECT s.doc, a.source, a.n_tokens, s.pos, s.shard
@@ -642,7 +642,7 @@ _CP3_SQL = """
         WHERE cm2.action = 'admit'
     ),
     mix AS ({mix}),
-    adm AS (SELECT doc, source, n_tokens FROM mix WHERE kept),
+    adm AS MATERIALIZED (SELECT doc, source, n_tokens FROM mix WHERE kept),
     shuf AS ({shuf}),
     cj AS (
         SELECT s.doc, a.source, a.n_tokens, s.pos, s.shard
@@ -1398,13 +1398,20 @@ def release_expectation_suite(
 # The six artifact CTEs are AS MATERIALIZED: each is referenced by
 # several expectations, and DuckDB's inlining heuristic re-evaluated
 # the whole nested cp chain PER REFERENCE (measured >600s at the
-# sf0.01 gate vs 141s materialized — the references share one
-# evaluation, which is also what the Spark side does via .fn reuse).
-# TIMING IS LOAD-SENSITIVE, the REGIME is the signal (ADVICE r13): the
-# r13 judge's contended gate run measured 451.9s for this same
-# materialized oracle — still exact, still one evaluation per chain.
-# A slow run alone does not mean the hint stopped working; >600s WITH
-# re-evaluation-shaped profile (per-reference chain cost) would.
+# sf0.01 gate without the hint — the references share one evaluation,
+# which is also what the Spark side does via .fn reuse). The top-level
+# hint alone was not enough: the multi-referenced CTEs NESTED inside
+# the chain — cp1/cp3's adm (shuf + cj), sql_temperature_mix's nz/tot
+# (tot + c, g + b) and cm1's base (the main select + dc2's split rel)
+# — were still inlined per reference, and nesting multiplies those
+# re-evaluations (cm1 → kept → mix → adm → shuf/cj). That was the
+# per-reference cost that remained: 141s at sf0.01 on a quiet host,
+# and at sf0.001 (500 documents) an OutOfMemoryException at DuckDB's
+# default 12.5 GiB limit after ~254s. With those CTEs materialized
+# too (4 threads, DuckDB 1.0.0, DuckDB side only): sf0.001 ~7s /
+# 0.6 GB RSS, sf0.01 ~8s, cp1 alone 78s → 1.6s at sf0.001;
+# tests/test_manifest.py pins dq5 to complete under 4 threads / 4GB,
+# where the unhinted text runs out of memory. Results are unchanged.
 _DQ5_SQL = f"""
     WITH dq5_lf AS MATERIALIZED ({{cp1}}),
     dq5_sf AS MATERIALIZED ({{cp5}}),

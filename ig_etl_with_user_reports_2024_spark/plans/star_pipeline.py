@@ -3442,8 +3442,12 @@ def sql_temperature_mix(
     metric with any INTEGER expression over ``rel``'s columns — the
     budget GRAIN is a parameter of the builder, not a different
     mixture (the Spark twin's ``tokens_col`` has always been one);
-    None keeps the historical word-count text byte-identical for
-    every existing oracle. All-BIGINT keep arithmetic — see
+    None keeps the word-count token metric, so every existing
+    oracle's RESULTS are unchanged (its text is not byte-identical).
+    ``nz`` (read by ``tot`` and ``c``) and ``tot`` (read by ``g`` and
+    ``b``) are ``AS MATERIALIZED``: DuckDB otherwise inlines them per
+    reference, and inside the cp chains (cp1/cp3 → adm → shuf/cj)
+    those re-evaluations multiply. All-BIGINT keep arithmetic — see
     mx1_temperature_mix's docstring."""
     # COALESCE to Long.MAX exactly as the Spark side does (ADVICE r9):
     # sampling.temperature_mix coalesces a NULL order value to 2^63-1 so
@@ -3465,9 +3469,9 @@ def sql_temperature_mix(
         SELECT {id_expr} AS doc, source,
                CAST({tok} AS BIGINT) AS n_tokens{qsel}
         FROM {rel}
-    ), nz AS (
+    ), nz AS MATERIALIZED (
         SELECT * FROM t WHERE n_tokens > 0
-    ), tot AS (
+    ), tot AS MATERIALIZED (
         SELECT source,
                CAST(SUM(n_tokens) AS BIGINT) AS t_s,
                CAST(FLOOR(SQRT(CAST(SUM(n_tokens) AS BIGINT))) AS BIGINT)
