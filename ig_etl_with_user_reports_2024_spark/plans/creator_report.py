@@ -7,23 +7,30 @@ Reference shape: ``run_analysis`` (analyze_insta_enhanced.py:1936-2025)
 loads two JSON docs per creator and fans out to ~18 Python functions,
 re-scanning the in-memory post list ~10×, one creator at a time.
 
-Spark shape (SURVEY.md §3.1 "rebuild lifecycle"):
+Spark shape (SURVEY.md §3.1 "rebuild lifecycle"), one projection per
+step (never a withColumn chain):
 
-    read users docs ─┐
-    read posts docs ─┤ posexplode(edges) → per-post feature projection
-                     │ (no shuffle: timestamps, ER formulas, flags,
-                     │  hashtags/mentions — one narrow select)
-                     ├─ ONE exchange on username: windows (top-6, latest-6,
-                     │  trend halves, gaps) + ONE groupBy with every
-                     │  aggregate (A4-A14)
-                     ├─ users ⋈ post-aggregates (J3) + broadcast dims
-                     │  (pricing C3, niche keywords C9, platforms)
-                     ├─ classifier CASE columns (C1-C14) + ER-desc sort
-                     ├─ persist the finished report (lazy: the first sink
-                     │  runs the joins once and fills the cache)
-                     └─ sinks, each reading the cached sorted report:
-                        analyzed JSON (S4), txt (S6), wide CSV (S5 —
-                        plans/wide_csv.py)
+    read users docs (persisted)
+      ├─ profile select (X1/X2/C1/C7/C8)
+      └─ ONE explode of (token, weight) ⋈ niche dim → ONE aggregation
+         (primary niche, confidences, distribution — C9/A10)
+    read posts docs → repartition(username) → posexplode(edges) →
+      per-post feature projection, persisted; every consumer below
+      keeps its username partitioning (no further exchange):
+      ├─ ONE window select + ONE groupBy with every aggregate (A4-A14,
+      │  top-6, C13 timeline) + ONE withColumns tail
+      ├─ hour histogram → ONE creator-grain agg (K4 modal hour, posting
+      │  pattern, timezone estimate)
+      ├─ ONE kind-tagged posexplode of every token family (hashtags/
+      │  mentions, sponsors/brands, locations) → (username, kind, token)
+      │  count + first (pos, idx) → ONE creator-grain agg
+      └─ collab keys (persisted) → collaborations (C12), UGC (K6)
+    fan-in: profile ⋈ the five creator-grain branches (J3) → ONE select
+      → broadcast pricing dim (C3) → classifier columns (C2-C14) in ONE
+      withColumns → ER-desc sort → persist the finished report (lazy:
+      the first sink runs the joins once and fills the cache)
+      └─ sinks, each reading the cached sorted report: analyzed JSON
+         (S4), txt (S6), wide CSV (S5 — plans/wide_csv.py)
 
 Every date window takes a pinned ``as_of`` (Q8); every order-sensitive
 step carries the arrival-order ``pos`` column (Q10); Python round() maps
@@ -42,7 +49,8 @@ from pyspark.sql import functions as F
 
 from .. import dims
 from ..config import AS_OF_REFERENCE, COLLAB_RECENT_DAYS, FAKE_FOLLOWER_SLICE, RECENT_DAYS
-from ..functions.text import MENTION_RE
+from ..functions.pyround import rounder
+from ..functions.text import MENTION_RE, bio_tokens, username_tokens
 from ..schemas import POST_DOC_SCHEMA, USER_DOC_SCHEMA
 from ..sources.readers import read_json_docs
 
@@ -255,58 +263,53 @@ def creator_post_aggregates(
       sponsored/organic means were already computed here (A13); the
       timeline collect and the crash flag (:663-667) join them, so the
       whole per-creator slice of detect_paid_partnerships is this one
-      aggregation (the explode-grain sponsor/brand lists stay in
-      creator_sponsor_brands)
+      aggregation (the explode-grain sponsor/brand lists ride
+      creator_tokens)
 
     python_rounding: route rounded columns through the CPython-exact
     pandas UDF (functions/pyround.py) for golden-file bit parity; the
     default is JVM bround (see pyround's docstring for why they differ).
     """
-    from ..functions.pyround import rounder
-
     rnd = rounder(python_rounding)
     w_time = Window.partitionBy("username").orderBy(
         F.col("taken_at").desc(), F.col("pos").asc()
     )
     w_part = Window.partitionBy("username")
     w_arrival = Window.partitionBy("username").orderBy(F.col("pos").asc())
+    w_recent = Window.partitionBy("username").orderBy(
+        F.when(F.col("is_recent_90d"), F.col("interaction_score"))
+        .otherwise(F.lit(None))
+        .desc_nulls_last(),
+        F.col("pos").asc(),
+    )
 
-    annotated = (
-        feat.withColumn("time_rank", F.row_number().over(w_time))
-        .withColumn("arrival_rank", F.row_number().over(w_arrival))
-        .withColumn("n_total", F.count("*").over(w_part))
+    annotated = feat.select(
+        "*",
+        F.row_number().over(w_time).alias("time_rank"),
         # Q7: recent half = first n//2 rows in arrival order (:502-504)
-        .withColumn("is_recent_half", F.col("arrival_rank") <= F.floor(F.col("n_total") / 2))
-        .withColumn(
-            "gap_days",
+        (
+            F.row_number().over(w_arrival)
+            <= F.floor(F.count("*").over(w_part) / 2)
+        ).alias("is_recent_half"),
+        (
             (
                 F.col("taken_at").cast("double")
                 - F.lag(F.col("taken_at"), -1).over(w_time).cast("double")
             )
-            / 86400.0,
-        )
-        .withColumn(
-            "recent_score_rank",
-            F.row_number().over(
-                Window.partitionBy("username").orderBy(
-                    F.when(F.col("is_recent_90d"), F.col("interaction_score"))
-                    .otherwise(F.lit(None))
-                    .desc_nulls_last(),
-                    F.col("pos").asc(),
-                )
-            ),
-        )
+            / 86400.0
+        ).alias("gap_days"),
+        F.row_number().over(w_recent).alias("recent_score_rank"),
         # viral threshold: the creator mean must exist BEFORE the groupBy
         # (window functions cannot nest inside aggregates)
-        .withColumn("_mean_score", F.avg("er_engagement").over(w_part))
+        F.avg("er_engagement").over(w_part).alias("_mean_score"),
+        # per-post top-6 ER is rounded FIRST (:1529) — row-level, so the
+        # compat UDF is usable here
+        rnd(F.col("er_interaction"), 2).alias("_er_int_r"),
     )
 
     slice20 = F.col("pos") < FAKE_FOLLOWER_SLICE
     q6_div = F.count("*") if compat_q6 else F.sum(F.when(slice20, 1).otherwise(0))
 
-    # per-post top-6 ER is rounded FIRST (:1529) — row-level, so the
-    # compat UDF is usable here
-    annotated = annotated.withColumn("_er_int_r", rnd(F.col("er_interaction"), 2))
     top6_er = F.when(
         (F.col("recent_score_rank") <= 6) & F.col("is_recent_90d"),
         F.col("_er_int_r"),
@@ -373,8 +376,8 @@ def creator_post_aggregates(
         F.max(F.col("has_foreign_owner")).alias("any_foreign_owner"),
         F.max(F.size("foreign_coauthors") > 0).alias("any_foreign_coauthor"),
         F.max(F.col("has_ugc_caption")).alias("any_ugc_caption"),
-        # A8 lives in creator_location_analysis (travel_frequency /
-        # diversity come from the full location-candidate list there)
+        # A8 lives in creator_tokens (travel_frequency / diversity
+        # come from the full location-candidate list there)
         F.sum(
             F.when(F.col("er_engagement") > 2 * F.col("_mean_score"), 1).otherwise(0)
         ).alias("viral_posts_count"),
@@ -459,28 +462,22 @@ def creator_post_aggregates(
     avg_spon = F.coalesce(F.col("sponsored_avg_engagement"), F.lit(0.0))
     avg_org = F.coalesce(F.col("organic_avg_engagement"), F.lit(0.0))
     spon_ratio = F.when((avg_spon > 0) & (avg_org > 0), avg_spon / avg_org)
-    return (
-        agg.withColumn("avg_likes", rnd(F.col("_avg_likes_raw"), 0).cast("long"))
-        .withColumn("avg_comments", rnd(F.col("_avg_comments_raw"), 0).cast("long"))
-        .withColumn("avg_shares", rnd(F.col("_avg_shares_raw"), 0).cast("long"))
-        .withColumn(
-            "avg_engagement_per_post", rnd(F.col("_avg_eng_raw"), 0).cast("long")
-        )
-        .withColumn("engagement_rate", engagement_rate)
-        .withColumn("consistency_score", consistency)
-        .withColumn("engagement_trend", trend)
-        .withColumn("post_frequency", post_frequency)
-        .withColumn("avg_latest_posts_er", avg_latest)
-        .withColumn(
-            "average_engagement_rate",
-            F.coalesce(rnd(F.col("_aer_raw"), 2), F.lit(0.0)),
-        )
-        .withColumns(
-            {f"post{i}_er": rnd(F.col(f"_post{i}_raw"), 2) for i in range(1, 7)}
-        )
-        .withColumn(
-            "top_6_posts",
-            F.transform(
+    return agg.withColumns(
+        {
+            "avg_likes": rnd(F.col("_avg_likes_raw"), 0).cast("long"),
+            "avg_comments": rnd(F.col("_avg_comments_raw"), 0).cast("long"),
+            "avg_shares": rnd(F.col("_avg_shares_raw"), 0).cast("long"),
+            "avg_engagement_per_post": rnd(F.col("_avg_eng_raw"), 0).cast("long"),
+            "engagement_rate": engagement_rate,
+            "consistency_score": consistency,
+            "engagement_trend": trend,
+            "post_frequency": post_frequency,
+            "avg_latest_posts_er": avg_latest,
+            "average_engagement_rate": F.coalesce(
+                rnd(F.col("_aer_raw"), 2), F.lit(0.0)
+            ),
+            **{f"post{i}_er": rnd(F.col(f"_post{i}_raw"), 2) for i in range(1, 7)},
+            "top_6_posts": F.transform(
                 "_top6_raw",
                 lambda s: F.struct(
                     s["interaction_score"].alias("interaction_score"),
@@ -491,12 +488,9 @@ def creator_post_aggregates(
                     s["taken_date"].alias("taken_at"),
                 ),
             ),
-        )
-        # null (not []) when crashed OR no sponsored posts — the shape the
-        # assembly and sinks already expect from the pre-merge left join
-        .withColumn(
-            "collaboration_timeline",
-            F.when(
+            # null (not []) when crashed OR no sponsored posts — the shape
+            # the assembly and sinks expect
+            "collaboration_timeline": F.when(
                 ~F.col("_timeline_crashed") & (F.col("sponsored_posts") > 0),
                 F.transform(
                     "_timeline_raw",
@@ -508,152 +502,263 @@ def creator_post_aggregates(
                     ),
                 ),
             ),
-        )
-        .withColumn("avg_sponsored_engagement", avg_spon)
-        .withColumn("avg_organic_engagement", avg_org)
-        .withColumn("total_sponsored_posts", F.col("sponsored_posts"))
-        .withColumn("sponsored_vs_organic_ratio", rnd(spon_ratio, 2))
-        .withColumn(
-            "sponsored_performs_better",
-            F.coalesce(spon_ratio > 1.0, F.lit(False)),
-        )
-        .drop(
-            "_top6_raw",
-            "_timeline_raw",
-            "_recent_mean",
-            "_older_mean",
-            "_score_stddev",
-            "_score_mean",
-            "_avg_gap_days",
-            "_latest6_er_sum",
-            "_latest6_n",
-            "_total_eng",
-            "_aer_raw",
-            "_avg_likes_raw",
-            "_avg_comments_raw",
-            "_avg_shares_raw",
-            "_avg_eng_raw",
-            *[f"_post{i}_raw" for i in range(1, 7)],
-        )
+            "avg_sponsored_engagement": avg_spon,
+            "avg_organic_engagement": avg_org,
+            "total_sponsored_posts": F.col("sponsored_posts"),
+            "sponsored_vs_organic_ratio": rnd(spon_ratio, 2),
+            "sponsored_performs_better": F.coalesce(spon_ratio > 1.0, F.lit(False)),
+        }
+    ).drop(
+        "_top6_raw",
+        "_timeline_raw",
+        "_recent_mean",
+        "_older_mean",
+        "_score_stddev",
+        "_score_mean",
+        "_avg_gap_days",
+        "_latest6_er_sum",
+        "_latest6_n",
+        "_total_eng",
+        "_aer_raw",
+        "_avg_likes_raw",
+        "_avg_comments_raw",
+        "_avg_shares_raw",
+        "_avg_eng_raw",
+        *[f"_post{i}_raw" for i in range(1, 7)],
     )
 
 
-def creator_hour_histogram(feat: DataFrame) -> DataFrame:
-    """(username, post_hour) → count + first arrival pos. Shared input of
-    creator_modal_hour and creator_location_analysis; creator_report
-    computes (and persists — it is creator×24-grain, tiny) this ONCE so
-    the histogram groupBy runs one scan instead of two."""
-    return feat.groupBy("username", "post_hour").agg(
+def creator_posting_hours(feat: DataFrame) -> DataFrame:
+    """Everything derived from the (username, post_hour) histogram, in
+    one creator-grain aggregation over it:
+
+    - A7 + K4 + C5 modal hour → daypart (analyze_insta_enhanced.py:
+      489-498): Counter.most_common(1), ties = insertion (arrival) order
+      (Q10) → (count desc, first pos, hour). Exact buckets: 6-11 Morning
+      / 12-17 Afternoon / 18-22 Evening / Night;
+    - the location module's posting-timezone pattern (hour → count in
+      first-seen order) and the poster-archetype estimate from the mean
+      hour of the top-5 hours (:205-240).
+    """
+    hours = feat.groupBy("username", "post_hour").agg(
         F.count("*").alias("cnt"), F.min("pos").alias("first_pos")
     )
-
-
-def creator_modal_hour(
-    feat: DataFrame, hours: DataFrame | None = None
-) -> DataFrame:
-    """A7 + K4 + C5 — posting-hour histogram → modal hour → daypart.
-
-    Reference: Counter.most_common(1) analyze_insta_enhanced.py:489-498;
-    ties = insertion (arrival) order (Q10) → (count desc, first pos).
-    Exact buckets: 6-11 Morning / 12-17 Afternoon / 18-22 Evening / Night.
-    """
-    if hours is None:
-        hours = creator_hour_histogram(feat)
-    w = Window.partitionBy("username").orderBy(
-        F.col("cnt").desc(), F.col("first_pos").asc(), F.col("post_hour").asc()
+    stats = hours.groupBy("username").agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(F.negative("cnt").alias("neg_cnt"), "first_pos", "post_hour")
+            )
+        ).alias("_by_count"),
+        F.map_from_entries(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("first_pos", "post_hour", "cnt"))),
+                lambda s: F.struct(s["post_hour"], s["cnt"]),
+            )
+        ).alias("posting_timezone_pattern"),
     )
-    best = hours.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    modal = F.col("_by_count")[0]["post_hour"]
     daypart = (
-        F.when(F.col("post_hour").between(6, 11), "Morning (6-11 AM)")
-        .when(F.col("post_hour").between(12, 17), "Afternoon (12-5 PM)")
-        .when(F.col("post_hour").between(18, 22), "Evening (6-10 PM)")
+        F.when(modal.between(6, 11), "Morning (6-11 AM)")
+        .when(modal.between(12, 17), "Afternoon (12-5 PM)")
+        .when(modal.between(18, 22), "Evening (6-10 PM)")
         .otherwise("Night (11 PM-5 AM)")
     )
-    return best.select(
+    top5 = F.slice("_by_count", 1, 5)
+    avg_top_hour = F.aggregate(
+        top5, F.lit(0.0), lambda acc, s: acc + s["post_hour"]
+    ) / F.size(top5)
+    tz_estimate = (
+        F.when(avg_top_hour.between(6, 10), "Morning poster (likely local timezone)")
+        .when(avg_top_hour.between(11, 15), "Afternoon poster (likely local timezone)")
+        .when(avg_top_hour.between(16, 22), "Evening poster (likely local timezone)")
+        .otherwise("Night poster (possible different timezone)")
+    )
+    return stats.select(
         "username",
-        F.col("post_hour").alias("most_active_hour"),
+        modal.alias("most_active_hour"),
         daypart.alias("best_posting_time"),
+        "posting_timezone_pattern",
+        tz_estimate.alias("timezone_estimate"),
     )
 
 
-def creator_hashtags_mentions(feat: DataFrame, k: int = 10) -> DataFrame:
-    """A7 + K3 — top-10 hashtags AND stoplist-filtered mentions over the
-    90-day window (analyze_insta_enhanced.py:1557-1609); Python dict-sort
-    ties = first-seen order (Q10) → (count desc, first pos, token).
+# the reference's 18 location-hashtag patterns (:148-158)
+LOCATION_HASHTAG_PATTERNS = [
+    r".*city$", r".*town$", r".*beach$", r".*park$", r".*street$",
+    r".*travel$", r".*trip$", r".*vacation$", r".*holiday$",
+    r"^nyc$", r"^la$", r"^sf$", r"^london$", r"^paris$", r"^tokyo$",
+    r"^miami$", r"^vegas$", r"^chicago$", r"^boston$",
+]
 
-    One pass: each token is tagged with its kind ('h'/'m'), both arrays
-    explode together, and the count → rank → top-k machinery runs
-    per (username, kind) — halving the feature-cache scans and removing
-    the full join between the two branches. The Q10 tie-break survives
-    the concat: posexplode indices of the combined array shift mention
-    positions by the SAME post's hashtag count, a per-row constant, so
-    the (pos, tok_idx) order within each kind is unchanged. A creator
-    with tokens of only one kind gets an empty map (not null) for the
-    other — every consumer (golden compare, wide_csv) already coalesces,
-    and the reference's Python dict default is {} too.
+
+def creator_tokens(
+    feat: DataFrame, cities: DataFrame | None = None, k: int = 10
+) -> DataFrame:
+    r"""Every token-family column of the report from ONE kind-tagged
+    posexplode of the feature table, one (username, kind, token) grain
+    carrying the count and the first (pos, idx), and one creator-grain
+    aggregation:
+
+    - 'h'/'m' — A7 + K3 top-10 hashtags and stoplist-filtered mentions
+      over the 90-day window (analyze_insta_enhanced.py:1557-1609);
+      Python dict-sort ties = first-seen order (Q10) → (count desc,
+      first pos, first idx);
+    - 's'/'b' — C13 sponsor-tag frequency map + unique-sponsor count, and
+      brand mentions (plain-\w regex, platform names excluded) (:605-661),
+      both in first-seen order (the reference's Counter order);
+    - 'l'/'t' — the location module (:95-240): location tags + capitalized
+      city candidates, first-occurrence dedup (the reference Counter()s
+      the DEDUPED list, so every count is 1 and most_visited is simply
+      the first 10 — quirk preserved), and location hashtags by the 18
+      patterns, a set in the reference, rendered sorted;
+    - the J2 first-match cities join (matched_us_cities) when a cities
+      dim is supplied (the reference's dim never loads, Q1).
+
+    The Q10 tie-breaks survive the concat: each kind's posexplode indices
+    are shifted by the SAME per-post constant (the lengths of the kinds
+    ahead of it in that post's array), so the (pos, idx) order within a
+    kind is unchanged. A creator with no token of a family gets null in
+    that family's columns (the report defaults n_unique_sponsors to 0 and
+    brand_mentions to []); one with hashtags but no mentions, or the
+    reverse, gets an empty map for the missing kind.
     """
-    tagged = F.concat(
-        F.transform(
-            "hashtags",
-            lambda t: F.struct(F.lit("h").alias("kind"), t.alias("token")),
+    def tag(kind: str, tokens) -> Column:
+        return F.transform(
+            tokens, lambda t: F.struct(F.lit(kind).alias("kind"), t.alias("token"))
+        )
+
+    def lh_match(tag_: Column) -> Column:
+        m = None
+        for pat in LOCATION_HASHTAG_PATTERNS:
+            hit = tag_.rlike(pat)
+            m = hit if m is None else (m | hit)
+        return m
+
+    locs_per_post = F.filter(
+        F.concat(
+            F.when(
+                F.col("location_name").isNotNull()
+                & (F.trim("location_name") != ""),
+                F.array(F.trim("location_name")),
+            ).otherwise(F.array().cast("array<string>")),
+            F.col("city_candidates"),
         ),
-        F.transform(
-            "mentions",
-            lambda t: F.struct(F.lit("m").alias("kind"), t.alias("token")),
-        ),
+        lambda s: s != F.lit(""),
     )
-    toks = (
-        feat.filter(F.col("is_recent_90d"))
-        .select("username", "pos", F.posexplode(tagged).alias("tok_idx", "kt"))
+    tagged = F.concat(
+        F.when(
+            F.col("is_recent_90d"),
+            F.concat(tag("h", "hashtags"), tag("m", "mentions")),
+        ).otherwise(F.array().cast("array<struct<kind:string,token:string>>")),
+        tag("s", "sponsor_users"),
+        tag("b", "mentions_w"),
+        tag("l", locs_per_post),
+        tag("t", F.filter("hashtags", lh_match)),
+    )
+    kind, token = F.col("kind"), F.col("token")
+    keep = (
+        # mentions stoplist is exact (:1600), on the lowered token
+        F.when(kind == "m", (F.length(token) >= 3) & ~token.isin(dims.MENTION_STOPLIST))
+        .when(kind == "s", token.isNotNull())
+        .when(
+            kind == "b",
+            token.isNotNull()
+            & ~F.lower(token).isin("instagram", "facebook", "twitter"),
+        )
+        .otherwise(True)
+    )
+    grain = (
+        feat.select("username", "pos", F.posexplode(tagged).alias("idx", "kt"))
         .select(
             "username",
-            "pos",
-            "tok_idx",
             F.col("kt.kind").alias("kind"),
-            # mentions stoplist is exact (:1600); hashtags pre-lowered at
-            # extract, mentions lowered (+ length/stoplist filter) here
-            F.when(
-                F.col("kt.kind") == "m", F.lower(F.col("kt.token"))
-            ).otherwise(F.col("kt.token")).alias("token"),
+            # hashtags are lowered at extract, mentions here
+            F.when(F.col("kt.kind") == "m", F.lower("kt.token"))
+            .otherwise(F.col("kt.token"))
+            .alias("token"),
+            # (pos, idx) packed into one long: min() of it stays a
+            # codegen'd hash aggregate (a struct min falls back to sort)
+            (F.shiftleft(F.col("pos").cast("long"), 32) + F.col("idx")).alias("seen"),
         )
-        .filter(
-            (F.col("kind") == "h")
-            | (
-                (F.length("token") >= 3)
-                & ~F.col("token").isin(dims.MENTION_STOPLIST)
+        .filter(keep)
+        .groupBy("username", "kind", "token")
+        .agg(F.count("*").alias("cnt"), F.min("seen").alias("first_seen"))
+    )
+
+    def in_order(k_: str, *fields) -> Column:
+        """The kind's tokens as structs of ``fields``, in first-seen order."""
+        return F.array_sort(
+            F.collect_list(F.when(kind == k_, F.struct("first_seen", *fields)))
+        )
+
+    def top_k(k_: str) -> Column:
+        ranked = F.array_sort(
+            F.collect_list(
+                F.when(
+                    kind == k_,
+                    F.struct(F.negative("cnt").alias("neg_cnt"), "first_seen", "token", "cnt"),
+                )
             )
         )
-    )
-    counts = toks.groupBy("username", "kind", "token").agg(
-        F.count("*").alias("cnt"),
-        F.min(F.struct("pos", "tok_idx")).alias("first_seen"),
-    )
-    w = Window.partitionBy("username", "kind").orderBy(
-        F.col("cnt").desc(),
-        F.col("first_seen.pos").asc(),
-        F.col("first_seen.tok_idx").asc(),
-    )
-    top = counts.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
-
-    def kind_map(kind: str) -> Column:
         return F.map_from_entries(
             F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("kind") == kind,
-                            F.struct("rn", "token", "cnt"),
-                        )
-                    )
-                ),
+                F.slice(ranked, 1, k),
                 lambda s: F.struct(s["token"].alias("key"), s["cnt"].alias("value")),
             )
         )
 
-    return top.groupBy("username").agg(
-        kind_map("h").alias("hashtags_last_90_days"),
-        kind_map("m").alias("mentions_last_90_days"),
+    n_locs = F.sum(F.when(kind == "l", 1).otherwise(0))
+    location_tags = F.transform(in_order("l", "token"), lambda s: s["token"])
+    has_hm = F.max(kind.isin("h", "m"))
+    has_sb = F.max(kind.isin("s", "b"))
+    has_lt = F.max(kind.isin("l", "t"))
+    out = grain.groupBy("username").agg(
+        F.when(has_hm, top_k("h")).alias("hashtags_last_90_days"),
+        F.when(has_hm, top_k("m")).alias("mentions_last_90_days"),
+        F.when(
+            has_sb,
+            F.map_from_entries(
+                F.transform(in_order("s", "token", "cnt"), lambda s: F.struct(s["token"], s["cnt"]))
+            ),
+        ).alias("sponsor_frequency"),
+        F.sum(F.when(kind == "s", 1).otherwise(0)).alias("n_unique_sponsors"),
+        F.transform(in_order("b", "token"), lambda s: s["token"]).alias("brand_mentions"),
+        F.when(has_lt, location_tags).alias("location_tags"),
+        F.when(has_lt, F.slice(location_tags, 1, 10)).alias("most_visited_locations"),
+        F.when(has_lt, n_locs).alias("travel_frequency"),
+        F.when(has_lt, F.least(F.lit(100), n_locs * 5)).alias("location_diversity_score"),
+        F.when(
+            has_lt, F.array_sort(F.collect_list(F.when(kind == "t", token)))
+        ).alias("location_hashtags"),
     )
+    if cities is None:
+        return out
+    # J2 — first-match substring theta-join against the (valid) dim
+    loc = F.lower(token)
+    cand = grain.filter(kind == "l").join(
+        F.broadcast(cities),
+        loc.contains(F.col("city")) | (loc == F.col("city")) | loc.startswith(F.col("city")),
+        "inner",
+    )
+    wc = Window.partitionBy("username", "token").orderBy(F.col("ord").asc())
+    matched = (
+        cand.withColumn("mrn", F.row_number().over(wc))
+        .filter(F.col("mrn") == 1)
+        .groupBy("username")
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("first_seen", "token", "city", "state_id"))
+                ),
+                lambda s: F.struct(
+                    s["token"].alias("input_location"),
+                    s["city"].alias("matched_city"),
+                    s["state_id"].alias("state"),
+                ),
+            ).alias("matched_us_cities")
+        )
+    )
+    return out.join(matched, "username", "left")
 
 
 def creator_collab_keys(feat: DataFrame) -> DataFrame:
@@ -857,259 +962,26 @@ def creator_ugc_examples(
     w_dedup = Window.partitionBy("username", "code").orderBy(
         F.col("prio").asc(), F.col("pos").asc()
     )
-    w_rank = Window.partitionBy("username").orderBy(
-        F.col("prio").asc(), F.col("pos").asc()
-    )
-    top3 = (
+    # after the dedup every row is its own post, so (prio, pos) is a
+    # total order: the first three of the sorted list are the top 3
+    return (
         cand.withColumn("dd", F.row_number().over(w_dedup))
         .filter(F.col("dd") == 1)
-        .withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 3)
-    )
-    return top3.groupBy("username").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("rn", "code"))),
-                lambda s: F.concat(
-                    F.lit("https://www.instagram.com/p/"), s["code"]
-                ),
-            ),
-            " | ",
-        ).alias("ugc_examples")
-    )
-
-
-def creator_sponsor_brands(feat: DataFrame) -> DataFrame:
-    r"""C13 explode-grain lists (analyze_insta_enhanced.py:605-661):
-    sponsor-tag frequency map + unique-sponsor count, and brand mentions
-    (plain-\w regex, excluding the platform names). The per-creator
-    partnership scalars and the collaboration timeline are folded into
-    creator_post_aggregates (one wide agg); the bio-indicator flag joins
-    in at report assembly (it is profile-level).
-    """
-    # one pass: kind-tagged union explode of both arrays, one
-    # (username, kind, token) count grain, one final agg — instead of
-    # two feature-cache scans full-joined back together. A sponsor-less
-    # creator with brand mentions gets sponsor_frequency = {} (not
-    # null); every consumer (golden compare, collaboration_score's
-    # coalesce) treats them alike, matching the reference's {} default.
-    tagged = F.concat(
-        F.transform(
-            "sponsor_users",
-            lambda s: F.struct(F.lit("s").alias("kind"), s.alias("token")),
-        ),
-        F.transform(
-            "mentions_w",
-            lambda m: F.struct(F.lit("b").alias("kind"), m.alias("token")),
-        ),
-    )
-    counts = (
-        feat.select("username", F.explode(tagged).alias("kt"))
-        .select(
-            "username",
-            F.col("kt.kind").alias("kind"),
-            F.col("kt.token").alias("token"),
-        )
-        .filter(
-            F.col("token").isNotNull()
-            & (
-                (F.col("kind") == "s")
-                | ~F.lower("token").isin("instagram", "facebook", "twitter")
-            )
-        )
-        .groupBy("username", "kind", "token")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return counts.groupBy("username").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.when(F.col("kind") == "s", F.struct("token", "cnt"))
-            )
-        ).alias("sponsor_frequency"),
-        F.sum(F.when(F.col("kind") == "s", 1).otherwise(0)).alias(
-            "n_unique_sponsors"
-        ),
-        F.collect_list(F.when(F.col("kind") == "b", F.col("token"))).alias(
-            "brand_mentions"
-        ),
-    )
-
-
-# the reference's 18 location-hashtag patterns (:148-158)
-LOCATION_HASHTAG_PATTERNS = [
-    r".*city$", r".*town$", r".*beach$", r".*park$", r".*street$",
-    r".*travel$", r".*trip$", r".*vacation$", r".*holiday$",
-    r"^nyc$", r"^la$", r"^sf$", r"^london$", r"^paris$", r"^tokyo$",
-    r"^miami$", r"^vegas$", r"^chicago$", r"^boston$",
-]
-
-
-def creator_location_analysis(
-    feat: DataFrame,
-    cities: DataFrame | None = None,
-    hours: DataFrame | None = None,
-) -> DataFrame:
-    """Location module (analyze_insta_enhanced.py:95-240): location tags +
-    capitalized city candidates, first-occurrence dedup (the reference
-    then Counter()s the DEDUPED list, so every count is 1 and
-    most_visited is simply the first 10 — quirk preserved), location
-    hashtags by the 18 patterns, hour histogram, poster-archetype
-    timezone estimate, and the J2 first-match cities join (empty when no
-    cities dim is supplied — the reference's dim never loads, Q1).
-    """
-    locs_per_post = F.filter(
-        F.concat(
-            F.when(
-                F.col("location_name").isNotNull()
-                & (F.trim("location_name") != ""),
-                F.array(F.trim("location_name")),
-            ).otherwise(F.array().cast("array<string>")),
-            F.col("city_candidates"),
-        ),
-        lambda s: s != F.lit(""),
-    )
-
-    def _lh_match(tag: Column) -> Column:
-        m = None
-        for pat in LOCATION_HASHTAG_PATTERNS:
-            hit = tag.rlike(pat)
-            m = hit if m is None else (m | hit)
-        return m
-
-    # one kind-tagged explode for both token families: 'l' location
-    # candidates (ordered — locations lead the concat, so their combined
-    # posexplode indices equal the original ones) and 't' pattern-matched
-    # location hashtags (membership only). One (username, kind, token)
-    # first-occurrence window replaces the separate dedup window +
-    # collect_set, and one groupBy renders every column.
-    tagged = F.concat(
-        F.transform(
-            locs_per_post,
-            lambda x: F.struct(F.lit("l").alias("kind"), x.alias("token")),
-        ),
-        F.transform(
-            F.filter("hashtags", _lh_match),
-            lambda x: F.struct(F.lit("t").alias("kind"), x.alias("token")),
-        ),
-    )
-    exploded = feat.select(
-        "username", "pos", F.posexplode(tagged).alias("idx", "kt")
-    ).select(
-        "username",
-        "pos",
-        "idx",
-        F.col("kt.kind").alias("kind"),
-        F.col("kt.token").alias("loc"),
-    )
-    w_first = Window.partitionBy("username", "kind", "loc").orderBy(
-        F.col("pos").asc(), F.col("idx").asc()
-    )
-    deduped_all = exploded.withColumn(
-        "rn", F.row_number().over(w_first)
-    ).filter(F.col("rn") == 1)
-    deduped = deduped_all.filter(F.col("kind") == "l")
-    n_locs = F.sum(F.when(F.col("kind") == "l", 1).otherwise(0))
-    loc_lists = deduped_all.groupBy("username").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("kind") == "l", F.struct("pos", "idx", "loc"))
-                )
-            ),
-            lambda s: s["loc"],
-        ).alias("location_tags"),
-        n_locs.alias("travel_frequency"),
-        F.least(F.lit(100), n_locs * 5).alias("location_diversity_score"),
-        F.collect_list(F.when(F.col("kind") == "t", F.col("loc"))).alias(
-            "location_hashtags"
-        ),
-    ).select(
-        "username",
-        "location_tags",
-        F.slice("location_tags", 1, 10).alias("most_visited_locations"),
-        "travel_frequency",
-        "location_diversity_score",
-        "location_hashtags",
-    )
-
-    if hours is None:
-        hours = creator_hour_histogram(feat)
-    w5 = Window.partitionBy("username").orderBy(
-        F.col("cnt").desc(), F.col("first_pos").asc()
-    )
-    top5 = hours.withColumn("rn", F.row_number().over(w5)).filter(F.col("rn") <= 5)
-    tz = top5.groupBy("username").agg(F.avg("post_hour").alias("avg_top_hour"))
-    tz_estimate = (
-        F.when(
-            F.col("avg_top_hour").between(6, 10),
-            "Morning poster (likely local timezone)",
-        )
-        .when(
-            F.col("avg_top_hour").between(11, 15),
-            "Afternoon poster (likely local timezone)",
-        )
-        .when(
-            F.col("avg_top_hour").between(16, 22),
-            "Evening poster (likely local timezone)",
-        )
-        .otherwise("Night poster (possible different timezone)")
-    )
-    pattern = hours.groupBy("username").agg(
-        F.map_from_entries(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("first_pos", "post_hour", "cnt"))),
-                lambda s: F.struct(s["post_hour"], s["cnt"]),
-            )
-        ).alias("posting_timezone_pattern")
-    )
-
-    # `pattern` derives from the unfiltered hour histogram, so its
-    # username set is EVERY creator with ≥1 post — a superset of the
-    # location/hashtag/tz branches. Left joins from it are therefore
-    # row-equivalent to the full joins they replace, and (unlike full
-    # joins, whose coalesced key loses the partitioning) they keep the
-    # creator-hash partitioning flowing, so the chain adds no exchange.
-    out = (
-        pattern.join(loc_lists, "username", "left")
-        .join(tz.select("username", tz_estimate.alias("timezone_estimate")),
-              "username", "left")
-    )
-    if cities is not None:
-        # J2 — first-match substring theta-join against the (valid) dim
-        cand = deduped.select("username", "pos", "idx", "loc").join(
-            F.broadcast(cities),
-            F.lower(F.col("loc")).contains(F.col("city"))
-            | (F.lower(F.col("loc")) == F.col("city"))
-            | F.lower(F.col("loc")).startswith(F.col("city")),
-            "inner",
-        )
-        wc = Window.partitionBy("username", "loc").orderBy(F.col("ord").asc())
-        matched = (
-            cand.withColumn("mrn", F.row_number().over(wc))
-            .filter(F.col("mrn") == 1)
-            .groupBy("username")
-            .agg(
+        .groupBy("username")
+        .agg(
+            F.array_join(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "idx", "loc", "city", "state_id"))
+                    F.slice(
+                        F.array_sort(F.collect_list(F.struct("prio", "pos", "code"))), 1, 3
                     ),
-                    lambda s: F.struct(
-                        s["loc"].alias("input_location"),
-                        s["city"].alias("matched_city"),
-                        s["state_id"].alias("state"),
+                    lambda s: F.concat(
+                        F.lit("https://www.instagram.com/p/"), s["code"]
                     ),
-                ).alias("matched_us_cities")
-            )
+                ),
+                " | ",
+            ).alias("ugc_examples")
         )
-        out = out.join(matched, "username", "left")
-    else:
-        out = out.withColumn(
-            "matched_us_cities",
-            F.array().cast(
-                "array<struct<input_location:string,matched_city:string,state:string>>"
-            ),
-        )
-    return out
+    )
 
 
 # C10 personality keyword lists (exact: analyze_insta_enhanced.py:337-346)
@@ -1151,8 +1023,6 @@ def creator_profile_features(
     preserved), size :1655-1678, account type :1814-1852, niche
     :962-1112, social links :790-835.
     """
-    from ..functions.pyround import rounder
-
     rnd = rounder(python_rounding)
     bio = F.coalesce(F.col("biography"), F.lit(""))
     bio_lower = F.lower(bio)
@@ -1302,109 +1172,98 @@ def creator_profile_features(
 
     # C9 niche (:962-1112): weights username 2.0 / biography 1.5 /
     # full_name 1.0 (:1036-1040); whole-token matching after the
-    # source-specific tokenizations (:1017-1023)
-    from ..functions.text import bio_tokens, username_tokens
+    # source-specific tokenizations (:1017-1023) — one explode over the
+    # three sources' concatenated (token, weight) arrays
+    def weighted(tokens: Column, weight: float) -> Column:
+        return F.transform(
+            tokens,
+            lambda t: F.struct(t.alias("token"), F.lit(weight).alias("weight")),
+        )
 
-    toks = (
-        users.select(
-            "username",
-            F.explode(username_tokens(F.col("username"))).alias("token"),
-            F.lit(2.0).alias("weight"),
-        )
-        .unionAll(
-            users.select(
-                "username",
-                F.explode(bio_tokens(F.coalesce(F.col("biography"), F.lit("")))),
-                F.lit(1.5),
+    toks = users.select(
+        "username",
+        F.explode(
+            F.concat(
+                weighted(username_tokens(F.col("username")), 2.0),
+                weighted(bio_tokens(F.coalesce(F.col("biography"), F.lit(""))), 1.5),
+                weighted(bio_tokens(F.coalesce(F.col("full_name"), F.lit(""))), 1.0),
             )
-        )
-        .unionAll(
-            users.select(
-                "username",
-                F.explode(bio_tokens(F.coalesce(F.col("full_name"), F.lit("")))),
-                F.lit(1.0),
-            )
-        )
-    )
+        ).alias("tw"),
+    ).select("username", "tw.token", "tw.weight")
     # Reference scoring quirk (:1046-1056): for each keyword, count = total
     # occurrences and weighted = Σ weight(source) PER OCCURRENCE, and the
     # category gets weighted*count — quadratic in the occurrence count.
-    # A keyword in several categories contributes to each.
+    # A keyword in several categories contributes to each ((keyword,
+    # category) is unique in the dim, so each occurrence joins once per
+    # category and the (token, category) grain counts it once). Weights
+    # are multiples of 0.5, so every sum is exact in any order.
     ndim = dims.niche_dim(spark)
-    kw_set = ndim.select("keyword").distinct()
-    per_kw = (
-        toks.join(F.broadcast(kw_set), toks.token == kw_set.keyword)
-        .groupBy("username", "token")
-        .agg(F.count("*").alias("cnt"), F.sum("weight").alias("wsum"))
-    )
     scores_df = (
-        per_kw.join(F.broadcast(ndim), per_kw.token == ndim.keyword)
+        toks.join(F.broadcast(ndim), toks.token == ndim.keyword)
+        .groupBy("username", "token", "category", "cat_ord")
+        .agg(F.count("*").alias("cnt"), F.sum("weight").alias("wsum"))
         .groupBy("username", "category", "cat_ord")
         .agg(F.sum(F.col("wsum") * F.col("cnt")).alias("score"))
     )
     w_total = Window.partitionBy("username")
-    w_rank = Window.partitionBy("username").orderBy(
-        F.col("score").desc(), F.col("cat_ord").asc()
-    )
-    niche = (
-        scores_df.withColumn(
-            "share", F.col("score") / F.sum("score").over(w_total) * 100
-        )
-        .withColumn("confidence", F.col("score") / F.max("score").over(w_total) * 100)
-        .withColumn("rn", F.row_number().over(w_rank))
-    )
-    primary = niche.filter(F.col("rn") == 1).select(
+    share = F.col("score") / F.sum("score").over(w_total) * 100
+    scored = scores_df.select(
+        "category",
+        "cat_ord",
         "username",
-        F.col("category").alias("overall_niche"),
-        # min(100, int(score/max*100)) — int() truncates (:1079-1080)
-        F.least(F.lit(100), F.floor("confidence").cast("int")).alias(
-            "niche_confidence"
-        ),
+        "score",
+        share.alias("share"),
+        rnd(share, 1).alias("share_r"),  # round pre-collect
+        (F.col("score") / F.max("score").over(w_total) * 100).alias("confidence"),
     )
-    conf_map = niche.groupBy("username").agg(
+
+    def capped(confidence: Column) -> Column:
+        # min(100, int(score/max*100)) — int() truncates (:1079-1080)
+        return F.least(F.lit(100), F.floor(confidence).cast("int"))
+
+    niche = scored.groupBy("username").agg(
+        # primary = (score desc, category order) first
+        F.array_min(
+            F.collect_list(
+                F.struct(F.negative("score"), "cat_ord", "category", "confidence")
+            )
+        ).alias("_primary"),
         F.map_from_entries(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("cat_ord", "category", "confidence"))),
                 lambda s: F.struct(
-                    s["category"].alias("key"),
-                    F.least(F.lit(100), F.floor(s["confidence"]).cast("int")).alias(
-                        "value"
-                    ),
+                    s["category"].alias("key"), capped(s["confidence"]).alias("value")
                 ),
             )
-        ).alias("niche_confidence_matched")
-    )
-    distribution = (
-        niche.withColumn("share_r", rnd(F.col("share"), 1))  # round pre-collect
-        .filter(F.col("share") >= 2.0)  # F9 (:1069)
-        .groupBy("username")
-        .agg(
-            F.map_from_entries(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("cat_ord", "category", "share_r"))
-                    ),
-                    lambda s: F.struct(
-                        s["category"].alias("key"),
-                        s["share_r"].alias("value"),
-                    ),
-                )
-            ).alias("niche_distribution")
-        )
+        ).alias("niche_confidence_matched"),
+        F.map_from_entries(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        # F9 (:1069)
+                        F.when(
+                            F.col("share") >= 2.0,
+                            F.struct("cat_ord", "category", "share_r"),
+                        )
+                    )
+                ),
+                lambda s: F.struct(
+                    s["category"].alias("key"), s["share_r"].alias("value")
+                ),
+            )
+        ).alias("niche_distribution"),
     )
     # no keyword hit → overall_niche is None (:1073); distribution {} is
     # represented as an empty map rather than null
-    return (
-        base.join(primary, "username", "left")
-        .join(conf_map, "username", "left")
-        .join(distribution, "username", "left")
-        .withColumn(
+    return base.join(niche, "username", "left").select(
+        *base.columns,
+        F.col("_primary.category").alias("overall_niche"),
+        capped(F.col("_primary.confidence")).alias("niche_confidence"),
+        "niche_confidence_matched",
+        F.coalesce(
             "niche_distribution",
-            F.coalesce(
-                "niche_distribution",
-                F.map_from_entries(F.array().cast("array<struct<key:string,value:double>>")),
-            ),
-        )
+            F.map_from_entries(F.array().cast("array<struct<key:string,value:double>>")),
+        ).alias("niche_distribution"),
     )
 
 
@@ -1414,7 +1273,7 @@ def creator_profile_features(
 
 
 # caches pinned by the most recent creator_report() call — users, feat,
-# hours, keys and the returned report itself, which the sinks read;
+# keys and the returned report itself, which the sinks read;
 # released at the start of the next call (see comment inside
 # creator_report).
 # CONTRACT: creator_report is single-threaded per SparkSession — a
@@ -1448,8 +1307,8 @@ def creator_report(
     for _old in _PERSISTED_HANDLES:
         _old.unpersist()
     _PERSISTED_HANDLES.clear()
-    # The creators table is consumed five times (profile's base + three
-    # token branches + the followers broadcast): persist it at creator
+    # The creators table is consumed three times (profile's base + the
+    # niche explode + the followers broadcast): persist it at creator
     # grain so the source scan runs once.
     users = users.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED_HANDLES.append(users)
@@ -1463,8 +1322,8 @@ def creator_report(
     #     row plus its derived arrays (measured at ~151k posts: 7.9s →
     #     1.3s for the materialization when the repartition moves ahead
     #     of the projection);
-    # (b) persist — seven downstream consumers and every ranking window
-    #     consume `feat`; unpersisted, each one re-runs the scan + the
+    # (b) persist — every creator-grain consumer and every ranking window
+    #     reads `feat`; unpersisted, each one re-runs the scan + the
     #     projection (15.0s end-to-end vs ~6s, bench creator_report_full);
     # (c) the select preserves the hash(username) partitioning, so every
     #     groupBy("username") / Window.partitionBy("username") consumer
@@ -1477,11 +1336,9 @@ def creator_report(
     _PERSISTED_HANDLES.append(feat)
     profile = creator_profile_features(users, spark, python_rounding)
 
-    # two tiny creator-grain intermediates consumed twice each: the hour
-    # histogram (modal + location) and the collab anchors (collaborations
-    # + ugc). Persisted so each is computed in one pass over `feat`.
-    hours = creator_hour_histogram(feat).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED_HANDLES.append(hours)
+    # the collab anchors are a tiny creator-grain intermediate consumed
+    # by both collaborations and ugc; persisted so it is computed in one
+    # pass over `feat`.
     keys = creator_collab_keys(feat).persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED_HANDLES.append(keys)
     # (r6 stage profile note: an eager .count() materialization of these
@@ -1492,37 +1349,14 @@ def creator_report(
     # JSON re-reads. See BENCH_NOTES_r06.md for the stage-level table.)
 
     # top_6_posts and the C13 partnership scalars/timeline ride inside
-    # creator_post_aggregates' single wide aggregation (three fewer
-    # passes over `feat` + two fewer report joins than computing them
-    # standalone); only the explode-grain sponsor/brand lists remain a
-    # separate consumer.
+    # creator_post_aggregates' single wide aggregation; every token
+    # family (hashtags/mentions, sponsors/brands, locations) rides
+    # creator_tokens' single explode.
     aggs = creator_post_aggregates(feat, as_of, compat_q6, python_rounding)
-    modal = creator_modal_hour(feat, hours=hours)
-    tagsmen = creator_hashtags_mentions(feat)
+    hours = creator_posting_hours(feat)
+    tokens = creator_tokens(feat, cities)
     collabs = creator_collaborations(feat, keys=keys)
     ugc = creator_ugc_examples(feat, keys=keys)
-    sponsor_brands = creator_sponsor_brands(feat)
-    location = creator_location_analysis(feat, cities, hours=hours)
-
-    report = (
-        profile.join(aggs, "username", "left")
-        .join(modal, "username", "left")
-        .join(tagsmen, "username", "left")
-        .join(collabs, "username", "left")
-        .join(ugc, "username", "left")
-        .join(sponsor_brands, "username", "left")
-        .join(location, "username", "left")
-        # creators whose posts carry no sponsor tags / brand mentions
-        # have no sponsor_brands row; restore the defaults the merged
-        # C13 path previously supplied for every creator
-        .withColumn(
-            "n_unique_sponsors", F.coalesce("n_unique_sponsors", F.lit(0))
-        )
-        .withColumn(
-            "brand_mentions",
-            F.coalesce("brand_mentions", F.array().cast("array<string>")),
-        )
-    )
 
     # C2 type/tier (:854-892): profile OR caption UGC hit, then demotion
     fol = F.col("follower_count")
@@ -1541,7 +1375,53 @@ def creator_report(
         .when(fol < 500000, "50K-500K")
         .otherwise("500K-1M+")
     )
-    report = report.withColumn("creator_type", creator_type).withColumn("tier", tier)
+    # no J2 dim: every creator with posts gets [] (the reference's
+    # empty match list), creators without posts stay null
+    matched_us_cities = (
+        F.col("matched_us_cities")
+        if cities is not None
+        else F.when(
+            F.col("n_posts").isNotNull(),
+            F.array().cast(
+                "array<struct<input_location:string,matched_city:string,state:string>>"
+            ),
+        )
+    )
+    # one projection over the fan-in: the report's column order (the
+    # analyzed-JSON field order), the defaults of the token columns for
+    # creators without any token, and the type/tier pricing keys
+    report = (
+        profile.join(aggs, "username", "left")
+        .join(hours, "username", "left")
+        .join(tokens, "username", "left")
+        .join(collabs, "username", "left")
+        .join(ugc, "username", "left")
+        .select(
+            *profile.columns,
+            *aggs.columns[1:],
+            "most_active_hour",
+            "best_posting_time",
+            "hashtags_last_90_days",
+            "mentions_last_90_days",
+            *collabs.columns[1:],
+            "ugc_examples",
+            "sponsor_frequency",
+            F.coalesce("n_unique_sponsors", F.lit(0)).alias("n_unique_sponsors"),
+            F.coalesce("brand_mentions", F.array().cast("array<string>")).alias(
+                "brand_mentions"
+            ),
+            "posting_timezone_pattern",
+            "location_tags",
+            "most_visited_locations",
+            "travel_frequency",
+            "location_diversity_score",
+            "location_hashtags",
+            "timezone_estimate",
+            matched_us_cities.alias("matched_us_cities"),
+            creator_type.alias("creator_type"),
+            tier.alias("tier"),
+        )
+    )
 
     # C11 fake followers (:244-310) — Q6-faithful inputs from the aggregate
     ff_er = F.when(
@@ -1620,10 +1500,7 @@ def creator_report(
         .when(t_social == max_trait, "Social")
         .otherwise("Authentic")
     )
-    from ..functions.pyround import rounder as _rounder
-
-    _rnd = _rounder(python_rounding)
-    authenticity = _rnd(
+    authenticity = rounder(python_rounding)(
         consistency0 / 100 * 30
         + F.least(t_social * 10, F.lit(30)).cast("double")
         + F.least(er0 * 2, F.lit(40.0)),
@@ -1675,75 +1552,67 @@ def creator_report(
     # Python round(mult*base) → bround 0dp
     pricing = dims.pricing_dim(spark)
     report = report.join(F.broadcast(pricing), ["creator_type", "tier"], "left")
-    price_cols = [
-        F.bround(F.col("base_price") * F.lit(mult), 0).cast("long").alias(name)
-        for name, mult in dims.PRICE_MULTIPLIERS
-    ]
-
-    import datetime as _dt
 
     # date strings render in the reference machine's wall clock
-    local_as_of = as_of + _dt.timedelta(minutes=tz_offset_min)
+    local_as_of = as_of + dt.timedelta(minutes=tz_offset_min)
+    as_of_date = F.lit(local_as_of.strftime("%Y-%m-%d"))
     date_range = (
-        (local_as_of - _dt.timedelta(days=RECENT_DAYS)).strftime("%Y-%m-%d")
+        (local_as_of - dt.timedelta(days=RECENT_DAYS)).strftime("%Y-%m-%d")
         + " to "
         + local_as_of.strftime("%Y-%m-%d")
     )
+    # followers falsy → calculate_top_post_er returns (0, [], 0) (:1508)
+    posts_3m = F.when(
+        F.col("follower_count") > 0,
+        F.coalesce("total_posts_last_3_months", F.lit(0)),
+    ).otherwise(0)
     report = (
-        report.withColumn("fake_follower_score", fake_score)
-        .withColumn("suspicious_indicators", suspicious)
-        .withColumn("authenticity_score", 100 - fake_score)
-        .withColumn("engagement_quality", quality)
-        .withColumn("collaboration_status", collab_status)
-        .withColumn("collaboration_status_detail", collab_detail)
-        .withColumn("personality_traits", personality_struct)
-        .withColumn("profile_insights", insights_struct)
-        .withColumn("collaboration_score", collaboration_score)
-        .withColumn("engagement_comparison", engagement_comparison)
-        .withColumn(
-            "has_paid_partnerships",
-            (F.coalesce("total_sponsored_posts", F.lit(0)) > 0) | bio_p,
-        )
-        # followers falsy → calculate_top_post_er returns (0, [], 0) (:1508)
-        .withColumn(
-            "total_posts_last_3_months",
-            F.when(
-                F.col("follower_count") > 0,
-                F.coalesce("total_posts_last_3_months", F.lit(0)),
-            ).otherwise(0),
-        )
-        .withColumn(
-            "top_6_posts",
-            F.coalesce(
-                "top_6_posts",
-                F.array().cast(
-                    "array<struct<interaction_score:bigint,likes:bigint,"
-                    "comments:bigint,engagement_rate:double,post_code:string,"
-                    "taken_at:string>>"
+        report.withColumns(
+            {
+                "fake_follower_score": fake_score,
+                "suspicious_indicators": suspicious,
+                "authenticity_score": 100 - fake_score,
+                "engagement_quality": quality,
+                "collaboration_status": collab_status,
+                "collaboration_status_detail": collab_detail,
+                "personality_traits": personality_struct,
+                "profile_insights": insights_struct,
+                "collaboration_score": collaboration_score,
+                "engagement_comparison": engagement_comparison,
+                "has_paid_partnerships": (
+                    F.coalesce("total_sponsored_posts", F.lit(0)) > 0
+                )
+                | bio_p,
+                "total_posts_last_3_months": posts_3m,
+                "top_6_posts": F.coalesce(
+                    "top_6_posts",
+                    F.array().cast(
+                        "array<struct<interaction_score:bigint,likes:bigint,"
+                        "comments:bigint,engagement_rate:double,post_code:string,"
+                        "taken_at:string>>"
+                    ),
                 ),
-            ),
-        )
-        .withColumn("ugc_examples", F.coalesce("ugc_examples", F.lit("")))
-        .withColumn(
-            "posts_analyzed_for_hashtags", F.col("total_posts_last_3_months")
-        )
-        .withColumn("hashtag_analysis_date_range", F.lit(date_range))
-        .withColumn(
-            "profile_picture",
-            F.when(
-                F.col("username") != "",
-                F.concat(
-                    F.lit("https://assets.veelapp.com/"),
-                    F.col("username"),
-                    F.lit(".jpg"),
-                ),
-            ).otherwise(""),
-        )
-        .select(
-            "*",
-            *price_cols,
-            F.col("roi").alias("estimated_roi"),
-            F.col("impressions").alias("impressions_visibility"),
+                "ugc_examples": F.coalesce("ugc_examples", F.lit("")),
+                "posts_analyzed_for_hashtags": posts_3m,
+                "hashtag_analysis_date_range": F.lit(date_range),
+                "profile_picture": F.when(
+                    F.col("username") != "",
+                    F.concat(
+                        F.lit("https://assets.veelapp.com/"),
+                        F.col("username"),
+                        F.lit(".jpg"),
+                    ),
+                ).otherwise(""),
+                **{
+                    name: F.bround(F.col("base_price") * F.lit(mult), 0).cast("long")
+                    for name, mult in dims.PRICE_MULTIPLIERS
+                },
+                "estimated_roi": F.col("roi"),
+                "impressions_visibility": F.col("impressions"),
+                "analysis_date": as_of_date,
+                "analyzed_date": as_of_date,
+                "scraped_date": as_of_date,
+            }
         )
         .drop(
             "_timeline_crashed",
@@ -1760,9 +1629,6 @@ def creator_report(
             "tag_pos",
             "uname",
         )
-        .withColumn("analysis_date", F.lit(local_as_of.strftime("%Y-%m-%d")))
-        .withColumn("analyzed_date", F.lit(local_as_of.strftime("%Y-%m-%d")))
-        .withColumn("scraped_date", F.lit(local_as_of.strftime("%Y-%m-%d")))
         .orderBy(
             F.col("average_engagement_rate").desc_nulls_last(), F.col("username").asc()
         )

@@ -42,29 +42,30 @@ def _post(i, taken_at, likes, comments, caption="", **kw):
     return {"node": node}
 
 
+def _write_creator(root, username, user_fields, posts):
+    d = root / username
+    d.mkdir()
+    (d / "userInfo.json").write_text(
+        json.dumps({"data": {"user": user_fields}, "status": "ok"})
+    )
+    (d / "postInfo.json").write_text(
+        json.dumps(
+            {
+                "data": {
+                    "xdt_api__v1__feed__user_timeline_graphql_connection": {
+                        "edges": posts,
+                        "page_info": {"has_next_page": False},
+                    }
+                },
+                "status": "ok",
+            }
+        )
+    )
+
+
 @pytest.fixture(scope="module")
 def fixture_dirs(tmp_path_factory):
     root = tmp_path_factory.mktemp("creators")
-
-    def write_creator(username, user_fields, posts):
-        d = root / username
-        d.mkdir()
-        (d / "userInfo.json").write_text(
-            json.dumps({"data": {"user": user_fields}, "status": "ok"})
-        )
-        (d / "postInfo.json").write_text(
-            json.dumps(
-                {
-                    "data": {
-                        "xdt_api__v1__feed__user_timeline_graphql_connection": {
-                            "edges": posts,
-                            "page_info": {"has_next_page": False},
-                        }
-                    },
-                    "status": "ok",
-                }
-            )
-        )
 
     # alice.ugc — UGC creator, she/her, email+phone, growing trend,
     # one #ad post mentioning @brandco, 12 posts all within 90 days
@@ -81,7 +82,8 @@ def fixture_dirs(tmp_path_factory):
         )
         for i in range(12)
     ]
-    write_creator(
+    _write_creator(
+        root,
         "alice.ugc",
         {
             "username": "alice.ugc",
@@ -103,7 +105,8 @@ def fixture_dirs(tmp_path_factory):
     )
 
     # bob — private profile: must be filtered out (F6)
-    write_creator(
+    _write_creator(
+        root,
         "bob.private",
         {"username": "bob.private", "full_name": "Bob", "biography": "",
          "follower_count": 10, "following_count": 10, "media_count": 1,
@@ -128,7 +131,8 @@ def fixture_dirs(tmp_path_factory):
         )
         for i in range(8)
     ]
-    write_creator(
+    _write_creator(
+        root,
         "carol",
         {"username": "carol", "full_name": "Carol Chen Voyages",
          "biography": "travel & adventure | business inquiries: mgmt@carol.tv",
@@ -316,7 +320,7 @@ def test_location_cities_join(spark, fixture_dirs):
     )
     followers = users.select("username", "follower_count")
     feat = cr.per_post_features(posts, followers, AS_OF)
-    loc = cr.creator_location_analysis(feat, cities=cities)
+    loc = cr.creator_tokens(feat, cities=cities)
     rows = {r.username: r for r in loc.collect()}
     matched = {m.input_location: (m.matched_city, m.state) for m in rows["alice.ugc"].matched_us_cities}
     # 'Austin' matches both 'austin' and 'aus' (substring) — first match
@@ -324,11 +328,75 @@ def test_location_cities_join(spark, fixture_dirs):
     assert matched.get("Austin") == ("austin", "TX")
 
 
+def test_set_valued_columns_keep_first_seen_order(spark, tmp_path):
+    # brand_mentions and sponsor_frequency list their tokens in
+    # first-seen (pos, caption index) order — the reference's Counter
+    # insertion order — and location_hashtags (a set in the reference)
+    # renders sorted. In the fixture the first-seen orders are not the
+    # alphabetical ones and the more frequent tokens are seen later, so
+    # neither a sort nor a count ranking can pass for them.
+    posts = [
+        _post(
+            0,
+            EPOCH - DAY,
+            10,
+            1,
+            caption="#zurichtrip with @zeta and @mid",
+            username="dora",
+            sponsor_tags=[{"username": "zed"}, {"username": "abe"}],
+        ),
+        _post(
+            1,
+            EPOCH - 2 * DAY,
+            10,
+            1,
+            caption="#aspentown @alpha @mid @alpha @instagram",
+            username="dora",
+            sponsor_tags=[{"username": "abe"}, {"username": "kim"}],
+        ),
+        _post(
+            2,
+            EPOCH - 3 * DAY,
+            10,
+            1,
+            caption="#mountainpark @alpha",
+            username="dora",
+            sponsor_tags=[{"username": "abe"}],
+        ),
+    ]
+    _write_creator(
+        tmp_path,
+        "dora",
+        {"username": "dora", "full_name": "Dora", "biography": "",
+         "follower_count": 100, "following_count": 10, "media_count": 3,
+         "is_private": False, "is_verified": False, "is_business": False,
+         "category": None, "external_url": None, "pronouns": [],
+         "bio_links": [], "profile_pic_url": None},
+        posts,
+    )
+    users = cr.load_users(spark, f"{tmp_path}/*/userInfo.json")
+    posts_df = cr.load_posts(spark, f"{tmp_path}/*/postInfo.json")
+    rep = cr.creator_report(spark, users, posts_df, as_of=AS_OF)
+    # map entry order read JVM-side: collect()'s dict keeps no order
+    row = rep.select(
+        "brand_mentions",
+        F.map_entries("sponsor_frequency").alias("sponsors"),
+        "n_unique_sponsors",
+        "location_hashtags",
+    ).collect()[0]
+    assert row.brand_mentions == ["zeta", "mid", "alpha"]
+    assert [(e.key, e.value) for e in row.sponsors] == [
+        ("zed", 1), ("abe", 3), ("kim", 1),
+    ]
+    assert row.n_unique_sponsors == 3
+    assert row.location_hashtags == ["aspentown", "mountainpark", "zurichtrip"]
+
+
 def test_successive_report_calls_release_caches_and_stay_correct(
     spark, fixture_dirs
 ):
     # each creator_report call releases the PREVIOUS call's persisted
-    # handles — users/feat/hours/keys and the final report itself
+    # handles — users/feat/keys and the final report itself
     # (bounded cache lifecycle) — both calls must produce identical,
     # correct results even though the second call unpersists the first's
     # caches
@@ -352,9 +420,9 @@ def test_successive_report_calls_release_caches_and_stay_correct(
 
 
 # --- property-based: hashtags/mentions top-10 vs the reference's dict
-# semantics (locks in the r5 kind-tagged union explode, whose Q10
-# tie-break rests on the combined posexplode index shifting each kind
-# by a per-post constant) ---------------------------------------------------
+# semantics (locks in the kind-tagged union explode of every token
+# family, whose Q10 tie-break rests on the combined posexplode index
+# shifting each kind by a per-post constant) ---------------------------
 
 try:
     from hypothesis import HealthCheck, given, settings
@@ -423,8 +491,18 @@ if _HAS_HYPOTHESIS:
         # read entry ORDER JVM-side (map_entries): the engine's map is
         # rank-ordered (and to_json renders it so), but collect()'s
         # MapType→dict conversion does not preserve entry order
+        # the other token families ride the same explode; empty here
+        feat = feat.withColumns(
+            {
+                **{
+                    c: F.array().cast("array<string>")
+                    for c in ("sponsor_users", "mentions_w", "city_candidates")
+                },
+                "location_name": F.lit(None).cast("string"),
+            }
+        )
         out = (
-            _cr.creator_hashtags_mentions(feat)
+            _cr.creator_tokens(feat)
             .select(
                 F.map_entries("hashtags_last_90_days").alias("h"),
                 F.map_entries("mentions_last_90_days").alias("m"),

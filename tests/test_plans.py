@@ -149,45 +149,104 @@ def test_r2_additions_plan_shapes(spark, sf_oracle):
     assert len(set(re.findall(r"\((\d+)\) Exchange", p))) <= 2, p
 
 
-def test_creator_report_consumers_run_off_cached_partitioning(spark):
-    # r4 plan contract (creator_report.py): the per-post feature table is
-    # repartition("username").persist()-ed, and every per-creator
-    # consumer (groupBy / ranking window) must plan ZERO additional
-    # username exchanges above the InMemoryTableScan — the one shuffle
-    # happens before the cache, then the whole report fans out off it.
-    # (Count only OUTER exchanges: the InMemoryRelation's stored plan
-    # text repeats the internal repartition exchange per reference.)
+@pytest.fixture(scope="module")
+def creator_docs(tmp_path_factory):
+    # the benchmark's seeded creator-document generator, small
     import datetime as dt
-    import os
 
-    import pytest as _pytest
+    from perfbench import creators
 
-    if not os.path.exists("/root/reference/analyzed.json"):
-        _pytest.skip("reference checkout absent")
+    root = tmp_path_factory.mktemp("generated_creators")
+    creators.generate(str(root), 8, 3, dt.datetime(2025, 9, 7))
+    return str(root)
+
+
+def _children(plan):
+    kids = plan.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _shuffles_above_caches(plan):
+    """Shuffle exchanges of a physical plan, descending through adaptive
+    plans but not into a cached relation's stored plan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _shuffles_above_caches(plan.executedPlan())
+    if name == "InMemoryTableScan":
+        return []
+    here = [plan.outputPartitioning().toString()] if name == "Exchange" else []
+    return here + [x for c in _children(plan) for x in _shuffles_above_caches(c)]
+
+
+def test_creator_report_consumers_run_off_cached_partitioning(spark, creator_docs):
+    # plan contract (creator_report.py): the per-post feature table is
+    # repartition("username").persist()-ed, and every per-creator
+    # consumer (groupBy / ranking window / broadcast join) must plan ZERO
+    # shuffles above the InMemoryTableScan — the one shuffle happens
+    # before the cache, then the whole report fans out off it.
+    import datetime as dt
+
     from pyspark import StorageLevel
 
     from ig_etl_with_user_reports_2024_spark.plans import creator_report as cr
 
-    users = cr.load_users(spark, "/root/reference/*/userInfo.json")
-    posts = cr.load_posts(spark, "/root/reference/*/postInfo.json")
+    as_of = dt.datetime(2025, 9, 7)
+    users = cr.load_users(spark, f"{creator_docs}/*/userInfo.json")
+    posts = cr.load_posts(spark, f"{creator_docs}/*/postInfo.json")
     followers = users.select("username", "follower_count")
     feat = cr.per_post_features(
-        posts.repartition("username"), followers, dt.datetime(2025, 9, 7), 0
+        posts.repartition("username"), followers, as_of, 0
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         feat.count()
+        keys = cr.creator_collab_keys(feat)
         for name, df in (
-            ("modal", cr.creator_modal_hour(feat)),
-            ("aggs", cr.creator_post_aggregates(feat, dt.datetime(2025, 9, 7), True, False)),
-            ("sponsor_brands", cr.creator_sponsor_brands(feat)),
-            ("location", cr.creator_location_analysis(feat)),
+            ("aggs", cr.creator_post_aggregates(feat, as_of, True, False)),
+            ("hours", cr.creator_posting_hours(feat)),
+            ("tokens", cr.creator_tokens(feat)),
+            ("keys", keys),
+            ("collaborations", cr.creator_collaborations(feat, keys=keys)),
+            ("ugc", cr.creator_ugc_examples(feat, keys=keys)),
         ):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            outer = plan.split("InMemoryRelation")[0]
-            n = outer.count("Exchange hashpartitioning(username")
-            assert n == 0, f"{name} re-shuffles the cached feature table ({n}x)"
+            shuffles = _shuffles_above_caches(df._jdf.queryExecution().executedPlan())
+            assert not shuffles, f"{name} re-shuffles the cached feature table: {shuffles}"
     finally:
         feat.unpersist()
+
+
+def test_creator_report_plan_shape(spark, creator_docs):
+    # the report's optimized logical plan: 19 joins (the five-way fan-in
+    # of the creator-grain builders, pricing, the niche keyword join and
+    # its profile join, the collab anchors' joins, and the followers join
+    # of every inlined reference to the feature table) and two explodes
+    # of the feature table — one kind-tagged posexplode for every token
+    # family plus the collaboration candidates. The feature table is
+    # built on the posts' own posexplode, so an explode over it is a
+    # Generate with a Generate below it.
+    import datetime as dt
+
+    from ig_etl_with_user_reports_2024_spark.plans import creator_report as cr
+
+    users = cr.load_users(spark, f"{creator_docs}/*/userInfo.json")
+    posts = cr.load_posts(spark, f"{creator_docs}/*/postInfo.json")
+    report = cr.creator_report(spark, users, posts, as_of=dt.datetime(2025, 9, 7))
+    # the report is returned persisted: its optimized plan is the cache
+    # relation, which keeps the query's own optimized plan
+    plan = report._jdf.queryExecution().optimizedPlan().cacheBuilder().logicalPlan()
+
+    def nodes(p):
+        return [p] + [n for c in _children(p) for n in nodes(c)]
+
+    every = nodes(plan)
+    joins = [n for n in every if n.nodeName() == "Join"]
+    feat_explodes = [
+        n
+        for n in every
+        if n.nodeName() == "Generate"
+        and any(m.nodeName() == "Generate" for m in nodes(n)[1:])
+    ]
+    assert len(joins) <= 19, len(joins)
+    assert len(feat_explodes) <= 2, [n.toString() for n in feat_explodes]
 
 
 def test_r5_additions_plan_shapes(spark, sf_oracle):
